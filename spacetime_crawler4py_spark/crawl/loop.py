@@ -32,17 +32,42 @@ Resume (T4): state lives in the FrontierStore's committed logs — a
 new CrawlEngine on the same state_dir continues from the last
 committed batch with an identical seen-set and order; a batch whose
 marker is missing is invisible (exactly-once).
+
+Lineage cuts: each per-batch intermediate (``batch``, ``parsed``, the
+bloom-``probed`` candidates, ``new``) is evaluated exactly once, by
+``localCheckpoint(eager=False)`` — the first action that already has
+to run materializes it, and every later plan reads the stored blocks.
+A plain ``.cache()`` is not enough: after every file write, Spark's
+``CacheManager.recacheByPath`` clears the cached data of any cached
+plan that reads the written path, and ``batch`` (hence ``parsed``)
+reads ``crawl_order/`` and ``discovered/`` through
+``store.pending()`` — so the crawl-order append would throw both
+caches away and the link stage would re-run the scheduler windows
+and the parse UDF.  A checkpoint is an RDD with no file lineage, so
+no write can invalidate it.  ``run_batch`` frees every checkpoint's
+blocks when the batch returns (committed or not).
+
+The price of the cut: checkpoint blocks live only on the executor
+that computed them, and lineage is gone, so a lost executor fails
+the batch instead of recomputing it.  The failure happens before
+the batch's commit marker is written; a restarted engine
+quarantines the partial files and re-runs the batch.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spacetime_crawler4py_spark.frontier.bloom import build_bloom, with_might_contain
+from spacetime_crawler4py_spark.frontier.bloom import (
+    BloomFilter,
+    build_bloom,
+    with_might_contain,
+)
 from spacetime_crawler4py_spark.frontier.scheduler import next_batch
 from spacetime_crawler4py_spark.frontier.store import FrontierStore
 from spacetime_crawler4py_spark.functions.urlnorm import (
@@ -54,6 +79,15 @@ from spacetime_crawler4py_spark.functions.urlnorm import (
 from spacetime_crawler4py_spark.functions.validity import col_is_valid
 from spacetime_crawler4py_spark.operators.ids import with_contiguous_index
 from spacetime_crawler4py_spark.operators.parse import parse_pages
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint`` DataFrame.
+
+    ``DataFrame.unpersist`` only covers ``.cache()``; a checkpoint's
+    logical plan is a ``LogicalRDD`` over the persisted RDD, which is
+    unpersisted directly (non-blocking)."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 class CrawlEngine:
@@ -126,6 +160,7 @@ class CrawlEngine:
         self._revalidate_floor = (
             self.store.last_batch_id() if revalidate_on_resume else -1
         )
+        # broadcast of the current seen filter (None until built)
         self._bloom = None
         self._bloom_age = 0
         self._bloom_covered: list[int] = []
@@ -210,6 +245,21 @@ class CrawlEngine:
     # ------------------------------------------------------------------
 
     def run_batch(self, batch_id: int) -> dict:
+        held: list[DataFrame] = []
+
+        def cut(df: DataFrame) -> DataFrame:
+            held.append(df.localCheckpoint(eager=False))
+            return held[-1]
+
+        try:
+            return self._run_batch(batch_id, cut)
+        finally:
+            for df in held:
+                _release_checkpoint(df)
+
+    def _run_batch(
+        self, batch_id: int, cut: Callable[[DataFrame], DataFrame]
+    ) -> dict:
         t0 = time.time()
         # A concurrent stream_frontier_ingest on the SAME store
         # advances seq outside this engine's cached high-water mark
@@ -240,12 +290,13 @@ class CrawlEngine:
                 .limit(1)
                 .withColumn("fetch_order", F.lit(0))
             )
+            sched_interm = None
         else:
             if self._max_seq is None:
                 self._max_seq = self.store.max_seq()
             if self._n_completed is None:
                 self._n_completed = self.store.completed().count()
-            sched = next_batch(
+            sched, sched_interm = next_batch(
                 pending,
                 window_ms=self.window_ms,
                 delay_ms=self.delay_ms,
@@ -253,14 +304,15 @@ class CrawlEngine:
                 order=self.order,
                 approx_rows=max(self._max_seq + 1 - self._n_completed, 0),
             )
-        batch = sched.select(
-            "url_hash", "url", "host", "seq", "depth", "fetch_order"
-        ).cache()
-        # ONE action materializes the batch cache AND hands the driver
-        # the per-host schedule counts — bounded by #hosts in the
-        # batch, never by #URLs.  The schedule itself (unbounded in
-        # host count at 10^7-host scale) stays distributed: crawl
-        # order + completion flips are Spark writes from this cache.
+        batch = cut(
+            sched.select("url_hash", "url", "host", "seq", "depth", "fetch_order")
+        )
+        # ONE action materializes the batch checkpoint AND hands the
+        # driver the per-host schedule counts — bounded by #hosts in
+        # the batch, never by #URLs.  The schedule itself (unbounded
+        # in host count at 10^7-host scale) stays distributed: crawl
+        # order + completion flips are Spark writes from this
+        # checkpoint.
         sched_by_host = {
             (r["host"] or ""): r["n"]
             for r in batch.groupBy("host").agg(F.count("*").alias("n")).collect()
@@ -268,12 +320,10 @@ class CrawlEngine:
         t_sched = time.time()
         n_batch = sum(sched_by_host.values())
         # the scheduler's fetch_order intermediate has served its
-        # purpose once the batch is cached + materialized
-        _sched_interm = getattr(sched, "_sg_cleanup", None)
-        if _sched_interm is not None:
-            _sched_interm.unpersist()
+        # purpose once the batch is materialized
+        if sched_interm is not None:
+            sched_interm.unpersist()
         if n_batch == 0:
-            batch.unpersist()
             return {"n_batch": 0}
 
         # ---- fetch join (J2): broadcast the small batch side
@@ -292,14 +342,17 @@ class CrawlEngine:
             & (F.col("text_len") <= 100_000)
         )
 
-        # ---- one Arrow pass: links + analytics features
-        parsed = parse_pages(
-            gated.select(
-                "url_hash", "url", "host", "seq", "depth", "fetch_order",
-                "status", "html",
-            )
-        ).where(F.size("links") > 0)
-        parsed = parsed.cache()
+        # ---- one Arrow pass: links + analytics features; the sink
+        # write below materializes the checkpoint the link pipeline
+        # reads
+        parsed = cut(
+            parse_pages(
+                gated.select(
+                    "url_hash", "url", "host", "seq", "depth", "fetch_order",
+                    "status", "html",
+                )
+            ).where(F.size("links") > 0)
+        )
 
         # ---- crawled-pages sink (analytics input; replaces the four
         # per-page file rewrites, scraper.py:156-272)
@@ -326,7 +379,7 @@ class CrawlEngine:
         # ---- crawl-order log (golden: Logs/Worker.log "Downloaded"
         # lines) + completion flips (T5: idempotent — completed()
         # projects (url_hash, batch_id) from this same log): ONE
-        # distributed write from the cached batch.  The schedule
+        # distributed write from the batch checkpoint.  The schedule
         # never rides through the driver — at 10^7 hosts × politeness
         # cap this is the write that the round-1/2 driver append
         # could not survive.
@@ -407,7 +460,7 @@ class CrawlEngine:
                         build_sharded_cuckoo,
                     )
 
-                    self._bloom = build_sharded_cuckoo(
+                    filt = build_sharded_cuckoo(
                         self.store.discovered().select(
                             "url_hash", "host_bucket"
                         )
@@ -417,11 +470,21 @@ class CrawlEngine:
                         build_sharded_bloom,
                     )
 
-                    self._bloom = build_sharded_bloom(
+                    filt = build_sharded_bloom(
                         self.store.discovered().select("url_hash", "host_bucket")
                     )
                 else:
-                    self._bloom = build_bloom(seen)
+                    # sized from the driver's seq high-water mark
+                    # (seqs are dense from 0) instead of a count job:
+                    # the size only sets the false-positive rate, the
+                    # exact anti-join keeps the result correct
+                    proto = BloomFilter.sized_for(self._max_seq + 1)
+                    filt = build_bloom(seen, n_bits=proto.n_bits, k=proto.k)
+                # ONE broadcast per rebuild, reused by every probe
+                # until the next; the replaced one is freed
+                if self._bloom is not None:
+                    self._bloom.destroy()
+                self._bloom = self.spark.sparkContext.broadcast(filt)
                 self._bloom_age = 0
                 # snapshot which committed batches the filter covers;
                 # later discoveries are handled by the pruned
@@ -439,10 +502,13 @@ class CrawlEngine:
                     "host_bucket",
                     F.pmod(F.xxhash64(col_netloc(F.col("url"))), F.lit(N_HOST_BUCKETS)).cast("int"),
                 )
-                probed = with_might_contain_sharded(cand_b, self._bloom, self.spark)
+                probed = with_might_contain_sharded(cand_b, self._bloom)
                 probed = probed.drop("host_bucket")
             else:
-                probed = with_might_contain(candidates, self._bloom, self.spark)
+                probed = with_might_contain(candidates, self._bloom)
+            # both Union branches below read the probe: checkpointed,
+            # the probe UDF and the candidate aggregate run once
+            probed = cut(probed)
             fresh = probed.where(~F.col("might_be_seen")).drop("might_be_seen")
             maybe = probed.where(F.col("might_be_seen")).drop("might_be_seen")
             # "definitely new" per the filter can still collide with
@@ -467,8 +533,9 @@ class CrawlEngine:
         # aggregation — bounded by #hosts in the batch, NOT by #new
         # URLs; the per-URL delta itself never reaches the driver.
         # Knowing the exact n_new lets the seq assigner below pick
-        # its adaptive path.
-        new = new.cache()
+        # its adaptive path; the discovered append reads the same
+        # checkpoint.
+        new = cut(new)
         new_by_host = {
             (r["host"] or ""): r["n"]
             for r in new.groupBy(col_netloc(F.col("url")).alias("host"))
@@ -502,7 +569,6 @@ class CrawlEngine:
             self._max_seq = base + n_new
             self.store.append_discovered(new_rows)
             _seq_interm.unpersist()
-        new.unpersist()
 
         # completions were written with the crawl-order log above;
         # only the driver-side count cache needs the increment
@@ -550,10 +616,7 @@ class CrawlEngine:
         )
 
         self.store.commit(batch_id, meta)
-        parsed.unpersist()
-        batch.unpersist()
         return meta
-
 
     # ------------------------------------------------------------------
 

@@ -28,6 +28,7 @@ import math
 
 import numpy as np
 import pandas as pd
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
@@ -54,10 +55,6 @@ def hex_spans_u64(
             out = out * np.uint64(16) + nib[:, j]
         outs.append(out)
     return outs
-
-
-def hex_slice_u64(s: pd.Series, start: int, stop: int) -> np.ndarray:
-    return hex_spans_u64(s, [(start, stop)])[0]
 
 
 class BloomFilter:
@@ -188,62 +185,20 @@ def build_sharded_bloom(
     return ShardedBloom(shards)
 
 
-def merge_sharded_delta(
-    sharded: ShardedBloom,
-    delta: DataFrame,
-    hash_col: str = "url_hash",
-    bucket_col: str = "host_bucket",
-) -> None:
-    """Fold a delta DataFrame into a live ShardedBloom in place —
-    the incremental-add twin of build_sharded_bloom: per-bucket
-    partial bitmaps are built distributed with each live shard's
-    exact parameters and OR-merged; buckets the filter has never
-    seen get a minimum-size shard.  Driver traffic is bounded by
-    (#touched buckets × shard size), never by the delta row count."""
-    params = {b: (bf.n_bits, bf.k) for b, bf in sharded.shards.items()}
-    proto = BloomFilter.sized_for(1024)
-    default_params = (proto.n_bits, proto.k)
-
-    def partial(it):
-        local: dict[int, BloomFilter] = {}
-        for pdf in it:
-            for bucket, grp in pdf.groupby(bucket_col):
-                bkt = int(bucket)
-                if bkt not in local:
-                    n_bits, k = params.get(bkt, default_params)
-                    local[bkt] = BloomFilter(n_bits, k)
-                local[bkt].add_series(grp[hash_col].astype(str))
-        for bkt, bf in local.items():
-            yield pd.DataFrame({"bucket": [bkt], "bits": [bf.bits.tobytes()]})
-
-    parts = (
-        delta.select(hash_col, bucket_col)
-        .mapInPandas(partial, "bucket int, bits binary")
-        .collect()
-    )
-    for row in parts:
-        bkt = int(row["bucket"])
-        if bkt not in sharded.shards:
-            n_bits, k = default_params
-            sharded.shards[bkt] = BloomFilter(n_bits, k)
-        sharded.shards[bkt].bits |= np.frombuffer(row["bits"], dtype=np.uint8)
-
-
 def with_might_contain_sharded(
     df: DataFrame,
-    sharded: ShardedBloom,
-    spark,
+    sharded: Broadcast,
     hash_col: str = "url_hash",
     bucket_col: str = "host_bucket",
     out_col: str = "might_be_seen",
 ) -> DataFrame:
-    b = spark.sparkContext.broadcast(sharded)
-
+    """``with_might_contain`` for a broadcast host_bucket-sharded
+    filter (ShardedBloom or frontier.cuckoo.ShardedCuckoo)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(BooleanType())
     def probe(hashes: pd.Series, buckets: pd.Series) -> pd.Series:
-        return pd.Series(b.value.contains_pairs(hashes.astype(str), buckets))
+        return pd.Series(sharded.value.contains_pairs(hashes.astype(str), buckets))
 
     return df.withColumn(out_col, probe(F.col(hash_col), F.col(bucket_col)))
 
@@ -255,12 +210,13 @@ def build_bloom(
     n_bits: int | None = None,
     k: int | None = None,
 ) -> BloomFilter:
-    """Distributed build: per-partition bitmaps, OR-reduced.
+    """Distributed build: per-partition bitmaps, OR-reduced — only P
+    partial bitmaps reach the driver, never the keys.
 
-    Pass explicit ``(n_bits, k)`` to build a DELTA filter with the
-    same parameters as a live filter — merging it in (bitwise OR) is
-    the incremental-add path of the crawl loop: the per-batch delta
-    never reaches the driver row-by-row, only P partial bitmaps do.
+    Without explicit ``(n_bits, k)`` the filter is sized by a count
+    job over ``seen``; a caller that already knows the key count
+    (the crawl loop's seq high-water mark) passes
+    ``BloomFilter.sized_for(n)``'s parameters and skips that job.
     """
     if n_bits is None or k is None:
         n = seen.count()
@@ -285,22 +241,21 @@ def build_bloom(
 
 
 def with_might_contain(
-    df: DataFrame, seen_filter, spark, hash_col: str = "url_hash",
+    df: DataFrame, seen_filter: Broadcast, hash_col: str = "url_hash",
     out_col: str = "might_be_seen",
 ) -> DataFrame:
     """Add the membership-probe column via a broadcast filter +
     Arrow-batched pandas UDF.
 
-    ``seen_filter`` is any object with a vectorized
+    ``seen_filter`` broadcasts any object with a vectorized
     ``contains_series(pd.Series) -> np.ndarray`` — the BloomFilter
     here or frontier.cuckoo.CuckooFilter (both are
-    numpy-array-backed and broadcast-picklable)."""
-    b = spark.sparkContext.broadcast(seen_filter)
-
+    numpy-array-backed and broadcast-picklable).  The caller owns
+    the broadcast: one per filter build, reused across probes."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(BooleanType())
     def probe(hashes: pd.Series) -> pd.Series:
-        return pd.Series(b.value.contains_series(hashes.astype(str)))
+        return pd.Series(seen_filter.value.contains_series(hashes.astype(str)))
 
     return df.withColumn(out_col, probe(F.col(hash_col)))

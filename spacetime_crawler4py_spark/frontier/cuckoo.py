@@ -115,27 +115,6 @@ class CuckooFilter:
         return removed
 
 
-def build_cuckoo(
-    seen, hash_col: str = "url_hash", headroom: float = 2.0
-) -> CuckooFilter:
-    """Build a SINGLE filter from a DataFrame of hex hashes (test /
-    small-scale surface; the crawl engine uses the sharded layout
-    below, whose inserts run in workers).
-
-    Inserts are inherently sequential (eviction chains), so this
-    build collects the key column; ``headroom`` over-sizes the table
-    beyond the build-time seen set so the filter absorbs up to
-    bloom_refresh batches of growth before the next rebuild (insert
-    failure at the load ceiling forces an immediate rebuild — see
-    CrawlEngine._sync_seen_filter's fallback).
-    """
-    rows = [r[hash_col] for r in seen.select(hash_col).collect()]
-    cf = CuckooFilter.sized_for(int(max(len(rows), 1024) * headroom))
-    if rows:
-        cf.add_series(pd.Series(rows))
-    return cf
-
-
 # -------------------------------------------- host_bucket sharding
 
 

@@ -45,11 +45,14 @@ def next_batch(
     robots: DataFrame | None = None,
     order: str = "lifo",  # "lifo" | "fifo_per_host"
     approx_rows: int | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """Select the next politeness-legal micro-batch.
 
-    Returns pending columns + ``fetch_order`` (0-based position in
-    the batch; the politeness scheduler's time axis).  When a
+    Returns ``(batch, intermediate)``: ``batch`` is the pending
+    columns + ``fetch_order`` (0-based position in the batch; the
+    politeness scheduler's time axis); the caller unpersists
+    ``intermediate`` once ``batch`` is materialized (the
+    ``with_contiguous_index`` contract).  When a
     ``robots`` table is given, its ``crawl_delay_ms`` overrides the
     default per-host delay (north_rule T6) and the per-host cap
     becomes row-local: ``window_ms // crawl_delay_ms``.
@@ -112,7 +115,4 @@ def next_batch(
     )
     if max_urls is not None:
         batch = batch.where(F.col("fetch_order") < max_urls)
-    # hand the cached intermediate to the caller for unpersist after
-    # the batch materializes (see with_contiguous_index contract)
-    batch._sg_cleanup = _interm
-    return batch
+    return batch, _interm

@@ -224,3 +224,41 @@ def test_oracle_restart_rebuild_parity(spark, tmp_path_factory):
     resumed.run()
     assert resumed.crawl_order() == r.crawl_order
     assert resumed.seen_set() == set(r.seen.keys())
+
+
+def test_batch_evaluates_its_intermediates_once(spark, corpus80, oracle80, tmp_path):
+    """Per-batch Spark job budget and checkpoint hygiene.
+
+    A store write drops the cache of every cached plan that reads the
+    written path, so a batch that only ``.cache()``s its schedule and
+    parse re-runs both (and the bloom probe, once per Union branch)
+    in the link stage: 26 jobs per batch.  With the lineage cut each
+    intermediate is evaluated once — no batch after the first (which
+    also sizes the frontier and builds the seen filter) may start
+    more than 17 jobs — and every checkpoint is freed by the time
+    its batch has committed."""
+    corpus_dir, _ = corpus80
+    sc = spark.sparkContext
+    eng = _engine(spark, tmp_path / "state", corpus_dir)
+    eng._bootstrap()
+    batch_id = eng.store.last_batch_id()
+    jobs = {}
+    try:
+        while True:
+            batch_id += 1
+            group = f"crawl-batch-{batch_id}"
+            n_persisted = sc._jsc.getPersistentRDDs().size()
+            sc.setJobGroup(group, group)
+            meta = eng.run_batch(batch_id)
+            sc._jsc.clearJobGroup()
+            jobs[batch_id] = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert sc._jsc.getPersistentRDDs().size() == n_persisted, batch_id
+            if meta["n_batch"] == 0:
+                break
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(jobs) > 2
+    first = min(jobs)
+    assert all(n <= 17 for b, n in jobs.items() if b != first), jobs
+    # the cut changes evaluation only, never the result
+    assert eng.seen_set() == set(oracle80.seen.keys())

@@ -146,14 +146,14 @@ def test_scheduler_batch_has_no_single_partition_exchange(spark):
         F.col("id").alias("seq"),
         F.lit(0).alias("depth"),
     )
-    batch = next_batch(pending, window_ms=4_000)
+    batch, interm = next_batch(pending, window_ms=4_000)
     assert "SinglePartition" not in _plan(batch)
     # fetch_order is the dense 0-based seq-DESC rank of the capped set
     rows = batch.orderBy("fetch_order").collect()
     assert [r["fetch_order"] for r in rows] == list(range(len(rows)))
     seqs = [r["seq"] for r in rows]
     assert seqs == sorted(seqs, reverse=True)
-    batch._sg_cleanup.unpersist()
+    interm.unpersist()
 
 
 def test_contiguous_index_adaptive_small_path(spark):
